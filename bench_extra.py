@@ -6,8 +6,8 @@ to attribute time and capture plan shapes, not to produce the official
 number.  Usage:
 
     python bench_extra.py [query ...]            # time the named queries
-    python bench_extra.py --plans [query ...]    # dump plans to plans/r07/
-    python bench_extra.py --suffix after ...     # plans/r07/<q>_after.txt
+    python bench_extra.py --plans [query ...]    # dump plans to plans/current/
+    python bench_extra.py --suffix after ...     # plans/current/<q>_after.txt
 
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / BENCH_EXTRA_REPEAT (default 3).
 """
@@ -79,7 +79,8 @@ def main() -> None:
         queries = {k: v for k, v in queries.items() if k in names}
 
     if dump_plans:
-        out_dir = Path(__file__).resolve().parent / "plans" / "r07"
+        root = Path(__file__).resolve().parent
+        out_dir = root / "plans" / "current"
         out_dir.mkdir(parents=True, exist_ok=True)
         import contextlib
         import io
@@ -88,7 +89,8 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            plan = buf.getvalue()
+            # checkout-relative paths, so captures diff across clones
+            plan = buf.getvalue().replace(str(root), "<repo>")
             (out_dir / f"{name}_{suffix}.txt").write_text(plan)
             print(f"wrote {name}_{suffix}.txt ({len(plan)} chars)")
             from warc2text_spark.operators.dedup import release_intermediates

@@ -107,23 +107,3 @@ def test_long_segment_fast_path_cap_boundaries():
         slow = process_html(doc, fused=False)
         assert fast == slow, doc[:60]
 
-
-def test_fast_lane_matches_general_kernel(spark):
-    """r6 flat-string fast lane: run_extract with fast_lane=True must
-    produce EXACTLY the general nested kernel's rows on a corpus mixing
-    single-text-span docs (the lane), multi-span, media-span, erroring,
-    empty-extraction and NULL-field shapes — spans, langs, err, charset
-    and plaintext all equal as multisets."""
-    from warc2text_spark.operators.extract import ExtractOptions, run_extract
-    from warc2text_spark.plans.spansgen import build_spans
-
-    spans = build_spans(spark, "/root/testdata/sf0.001")
-    for classifier in (None, "heuristic"):
-        a = run_extract(spans, ExtractOptions(classifier=classifier,
-                                              fast_lane=True))
-        b = run_extract(spans, ExtractOptions(classifier=classifier,
-                                              fast_lane=False))
-        cols = sorted(a.columns)
-        ra = sorted(map(repr, a.select(*cols).collect()))
-        rb = sorted(map(repr, b.select(*cols).collect()))
-        assert ra == rb, f"lane divergence under classifier={classifier}"

@@ -233,3 +233,24 @@ def test_warc_python_datasource(spark, warc_file):
     urls = {r.url for r in res.main.collect()}
     assert urls == {"https://a.example/1.html", "https://a.example/4.html",
                     "https://a.example/5.html"}
+
+
+def test_warc_pipeline_plan_scans_once(spark, warc_file):
+    """The WARC path reads and parses each file once: one binaryFile scan,
+    one MapInArrow for the WARC parse plus one for extraction, and one A1
+    totalRecords CollectMetrics node."""
+    import re
+
+    from warc2text_spark.plans.pipeline import (PipelineOptions,
+                                                demux_by_lang, run_pipeline)
+    from warc2text_spark.sources.warcio import warc_to_spans_df
+    res = run_pipeline(warc_to_spans_df(spark, warc_file),
+                       PipelineOptions(classifier="heuristic",
+                                       media_text_mode="extract",
+                                       num_partitions=4))
+    plan = demux_by_lang(res.main)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall(r"\bFileScan binaryFile\b", plan)) == 1, plan
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 2, plan
+    assert len(re.findall(r"\bCollectMetrics\b.*\btotalRecords\b",
+                          plan)) == 1, plan

@@ -117,15 +117,6 @@ class ExtractOptions:
     # (pairs with split_stream(pdf_text=True), which keeps PDF records
     # in the main stream rather than the K3 side route)
     pdf_text: bool = False
-    # r6 (VERDICT item 3): route single-text-span documents — the
-    # overwhelmingly common crawl shape — through a FLAT-STRING kernel
-    # lane that skips the nested list<struct> Arrow conversion in both
-    # directions (the measured bigdoc crossing bill); output spans/langs
-    # are rebuilt NATIVELY from the plaintext column, so the 10-100 KB
-    # body crosses Python exactly once instead of three times.  Same
-    # _clean_doc semantics (differential-tested); set False to force
-    # every document through the general nested lane.
-    fast_lane: bool = True
     extra: dict = field(default_factory=dict)
 
 
@@ -417,156 +408,15 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, key)
 
 
-_FAST_LANE_CLASSIFIERS = (None, "skip", "heuristic", "model")
-
-
-def make_fast_kernel(opts: ExtractOptions):
-    """Flat-string lane of Kernel 1 (single-text-span documents): the
-    body crosses as a plain string column — no list<struct> flatten on
-    input, no nested rebuild on output.  Runs the EXACT _clean_doc per
-    document (a one-tuple span list), emits only the scalar columns
-    (+ the top language label); run_extract rebuilds spans/langs
-    natively from plaintext, which for this shape is definitionally the
-    single output span's text and the single-language chunk."""
-    classifier = opts.classifier
-    tag_filters_text = opts.tag_filters_text
-
-    out_fields = [("doc_id", pa.string()), ("url", pa.string()),
-                  ("http_ct", pa.string()), ("warc_date", pa.string()),
-                  ("charset", pa.string()), ("err", pa.int32()),
-                  ("plaintext", pa.string()), ("_offset", pa.int32())]
-    if classifier:
-        out_fields.append(("lang", pa.string()))
-    schema = pa.schema(out_fields)
-
-    def kernel(batches):
-        tag_filters = parse_tag_filters(tag_filters_text) \
-            if tag_filters_text else {}
-        detector = None
-        if classifier:
-            from ..functions.langid import get_detector
-            detector = get_detector(classifier)
-        import pyarrow.compute as pc
-        for batch in batches:
-            acols = {n: batch.column(i)
-                     for i, n in enumerate(batch.schema.names)}
-            n_rows = batch.num_rows
-            empty = [None] * n_rows
-
-            def plist(name):
-                c = acols.get(name)
-                return c.to_pylist() if c is not None else empty
-
-            urls = plist("url")
-            texts_in = plist("_text")
-            offs = acols["_offset"]
-            charsets, errs, plaintexts, langs = [], [], [], []
-            enc_urls = [] if opts.encode_urls else None
-            for url0, http_ct, content_enc, transfer_enc, stext, soff in \
-                    zip(urls, plist("http_ct"), plist("content_enc"),
-                        plist("transfer_enc"), texts_in,
-                        offs.to_pylist()):
-                charset, err, plaintext, _spans, _raw = _clean_doc(
-                    url0, http_ct, content_enc, transfer_enc,
-                    (("text", stext, "", soff),), tag_filters, opts)
-                if enc_urls is not None:
-                    enc_urls.append(encode_url(url0 or ""))
-                charsets.append(charset)
-                errs.append(err)
-                plaintexts.append(plaintext)
-                if detector is not None:
-                    if err == rec.SUCCESS and plaintext:
-                        langs.append(sorted(detector.detect(plaintext))[0])
-                    else:
-                        langs.append("")
-
-            def native(name):
-                c = acols.get(name)
-                if c is None:
-                    return pa.array([""] * n_rows, type=pa.string())
-                return pc.fill_null(c, "")
-
-            arrays = [acols.get("doc_id",
-                                pa.array(empty, type=pa.string())),
-                      (pa.array(enc_urls, type=pa.string())
-                       if enc_urls is not None else native("url")),
-                      native("http_ct"), native("warc_date"),
-                      pa.array(charsets, type=pa.string()),
-                      pa.array(errs, type=pa.int32()),
-                      pa.array(plaintexts, type=pa.string()),
-                      pc.fill_null(offs, 0).cast(pa.int32())]
-            if detector is not None:
-                arrays.append(pa.array(langs, type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-
-    return kernel
-
-
-def _fast_lane_rebuild(raw: DataFrame, classifier) -> DataFrame:
-    """Native spans/langs reconstruction for the flat lane: one array of
-    one struct built in whole-stage codegen from the plaintext column —
-    the nested structures never exist on the Python side."""
-    span_t = ("array<struct<kind:string,text:string,"
-              "media_ref:string,offset:int>>")
-    span = F.array(F.struct(
-        F.lit("text").alias("kind"), F.col("plaintext").alias("text"),
-        F.lit("").alias("media_ref"),
-        F.coalesce(F.col("_offset"), F.lit(0)).cast("int").alias("offset")))
-    cols = [F.col("doc_id"), F.col("url"), F.col("http_ct"),
-            F.col("warc_date"), F.col("charset"), F.col("err"),
-            F.col("plaintext"),
-            F.when(F.col("plaintext") != "", span)
-            .otherwise(F.expr(f"cast(array() as {span_t})")).alias("spans")]
-    if classifier:
-        lang_t = "array<struct<lang:string,chunk:string>>"
-        lang_arr = F.array(F.struct(
-            F.col("lang").alias("lang"),
-            F.col("plaintext").alias("chunk")))
-        cols.append(
-            F.when((F.col("err") == rec.SUCCESS)
-                   & (F.col("plaintext") != ""), lang_arr)
-            .otherwise(F.expr(f"cast(array() as {lang_t})")).alias("langs"))
-    return raw.select(*cols)
-
-
 def run_extract(df: DataFrame, opts: ExtractOptions | None = None,
                 num_partitions: int | None = None) -> DataFrame:
     """Project to kernel inputs, optionally salt-repartition, run Kernel 1.
 
-    Documents with exactly one plain text span (no media_ref) take the
-    flat-string fast lane (see ExtractOptions.fast_lane); everything
-    else — multi-span, media, NULL spans — runs the general nested
-    kernel.  Both lanes produce the identical output schema and the
-    identical per-document rows (differential-tested)."""
+    Every document takes the same nested kernel, so the input is scanned,
+    filtered and parsed once per pass."""
     opts = opts or ExtractOptions()
-    cols = [c for c in KERNEL_INPUT_COLS if c in df.columns]
-    projected = df.select(*cols)
+    projected = df.select(*[c for c in KERNEL_INPUT_COLS if c in df.columns])
     if num_partitions:
         projected = salted_repartition(projected, num_partitions)
-    ddl = _out_ddl(opts.classifier, opts.keep_payload)
-    use_fast = (opts.fast_lane and "spans" in projected.columns
-                and not opts.keep_payload and not opts.pdf_text
-                and opts.classifier in _FAST_LANE_CLASSIFIERS)
-    if not use_fast:
-        return projected.mapInArrow(make_extract_kernel(opts), ddl)
-    s0 = F.col("spans")[0]
-    cond = F.coalesce(
-        (F.size("spans") == 1)
-        & (F.coalesce(s0["kind"], F.lit("text")) == "text")
-        & (F.coalesce(s0["media_ref"], F.lit("")) == ""),
-        F.lit(False))
-    meta = [c for c in cols if c != "spans"]
-    fast_in = projected.filter(cond).select(
-        *meta,
-        F.coalesce(s0["text"], F.lit("")).alias("_text"),
-        F.coalesce(s0["offset"], F.lit(0)).alias("_offset"))
-    fast_ddl = ("doc_id string, url string, http_ct string, "
-                "warc_date string, charset string, err int, "
-                "plaintext string, _offset int")
-    if opts.classifier:
-        fast_ddl += ", lang string"
-    fast_raw = fast_in.mapInArrow(make_fast_kernel(opts), fast_ddl)
-    fast_out = _fast_lane_rebuild(fast_raw, opts.classifier)
-    slow_out = projected.filter(~cond).mapInArrow(
-        make_extract_kernel(opts), ddl)
-    return slow_out.unionByName(fast_out)
+    return projected.mapInArrow(make_extract_kernel(opts),
+                                _out_ddl(opts.classifier, opts.keep_payload))

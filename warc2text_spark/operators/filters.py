@@ -163,10 +163,15 @@ def split_stream(
     side route — the pdf frame comes back empty.
 
     The two non-trivial derived values (payload byte count — an array
-    aggregate — and the cleaned MIME type) are materialized once as helper
-    columns: Catalyst does not common-subexpression-eliminate lambda
-    aggregates across predicate terms, so inlining them evaluates the spans
-    walk ~5x per row (observed in the physical plan).
+    aggregate — and the cleaned MIME type) are written as helper columns
+    ``_pb``/``_cct``, but they are NOT materialized: Catalyst collapses the
+    ``withColumn`` projections into the Filter and inlines both
+    expressions into every predicate term that uses them.  The executed
+    Filter holds nine copies of the spans ``aggregate`` and, being a
+    lambda expression outside whole-stage codegen, gets no
+    common-subexpression elimination — so a row can walk its spans up
+    to nine times here, plus once more for the A1 ``totalBytes`` metric
+    that run_pipeline attaches above it.
     """
     cols = df.columns
     pb = F.col("_pb")

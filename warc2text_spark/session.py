@@ -11,6 +11,25 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_MEM_MB = 32 * 1024
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """Driver heap for a host whose ``/proc/meminfo`` text is given: half
+    of MemTotal, capped at 32g (32g when MemTotal cannot be read)."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            mb = int(line.split()[1]) // 1024 // 2
+            return f"{min(mb, MAX_DRIVER_MEM_MB)}m"
+    return f"{MAX_DRIVER_MEM_MB}m"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return default_driver_memory(f.read())
+    except OSError:
+        return default_driver_memory("")
 
 
 def get_spark(app_name: str = "warc2text-spark",
@@ -46,8 +65,10 @@ def get_spark(app_name: str = "warc2text-spark",
         .config("spark.ui.enabled", "false")
         # local mode: the driver JVM is also the executor — size its heap
         # for 32 concurrent task buffers or GC becomes the throughput
-        # ceiling (observed: 8g caps ~70k docs/s, 16g+ reaches ~200k)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # ceiling (observed: 8g caps ~70k docs/s, 16g+ reaches ~200k), but
+        # never past half the host's memory
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _host_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
