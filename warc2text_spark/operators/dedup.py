@@ -7,9 +7,13 @@ Scale design notes (the part that matters at 10^12 docs):
   digest per partition;
 * MinHash+LSH turns near-dup detection into an equality join: per doc a
   constant number of band signatures (computed as per-row array expressions,
-  no explode, no shuffle), then a self-join per band on the band value.
-  Band buckets are tiny, so AQE handles the residual skew; the quadratic
-  explosion of a similarity cross-join never happens;
+  no explode, no shuffle), then ONE self-join on the packed (band, value)
+  key.  The join is quadratic per bucket: a bucket with n members emits
+  ~n^2 rows before the ``a<b`` filter and the distinct (the perfbench
+  ``dedup_hotbucket`` workload, one viral block shared by 15% of the docs:
+  28,635 raw join rows for 7,222 pairs).  AQE skew splitting spreads that
+  work over tasks but does not cut it; a per-bucket cap is not
+  implemented;
 * embedding near-dup at small scale is an exact self-join; the scale path
   is the same LSH trick over random-hyperplane sign bits (similarity.py).
 """
@@ -19,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textops import tokens
+from .textops import let, tokens
 
 # ---------------------------------------------------------------------------
 # intermediate materialization — the pair operators below compute an
@@ -75,14 +79,16 @@ def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def shingles(text_col: str = "text", k: int = 3):
-    """Word k-gram shingles as a per-row array expression."""
-    w = tokens(F.col(text_col))
-    n = F.size(w)
-    return F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.concat_ws(
-            " ", *[F.element_at(w, i + j) for j in range(k)])),
-    ).otherwise(F.array(F.col(text_col)))
+    """Word k-gram shingles as a per-row array expression; a document of
+    fewer than k tokens is its own single shingle.  The token array is
+    bound with ``let`` so the document is split once per row, not once
+    per shingle."""
+    return let(tokens(F.col(text_col)), lambda w: F.when(
+        F.size(w) >= k,
+        F.transform(F.sequence(F.lit(1), F.size(w) - (k - 1)),
+                    lambda i: F.concat_ws(
+                        " ", *[F.element_at(w, i + j) for j in range(k)])),
+    ).otherwise(F.array(F.col(text_col))))
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
@@ -120,8 +126,11 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
     ONE equality self-join on (band, sig) over the exploded signature rows
     — signatures are computed once (not re-evaluated per join side), and
     the whole LSH bucket join costs a single shuffle regardless of the
-    number of bands.  Bucket skew (a viral boilerplate signature) is
-    handled by AQE skew-join splitting."""
+    number of bands.  A bucket with n members (a viral boilerplate
+    signature) emits ~n^2 join rows before the ``a<b`` filter and the
+    distinct — 28,635 raw rows for 7,222 pairs on perfbench's
+    ``dedup_hotbucket``; AQE skew splitting spreads them over tasks but
+    does not cut them, and no per-bucket cap is implemented."""
     sigs = minhash_signatures(df, text_col, bands)
     # r7: (band, sig-hex-string) packed into ONE long join key —
     # band << 32 | sig-as-uint32 (conv is exact for 8 hex chars, and
@@ -187,9 +196,11 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     ~N^2/256 per band instead of the 16-bit/16-bucket demonstrator's
     ~N^2/16 that degenerates toward all-pairs at corpus scale.  By the
     pigeonhole principle eight bands of 8 bits catch every pair with
-    Hamming <= 7, so max_hamming=3 loses no recall.  Candidate
-    skew per bucket is handled by AQE skew-join splitting, like the
-    MinHash join."""
+    Hamming <= 7, so max_hamming=3 loses no recall.  Like the MinHash
+    join, a bucket with n members emits ~n^2 join rows before the
+    ``a<b`` and Hamming filters and the distinct; AQE skew splitting
+    spreads them over tasks but does not cut them, and no per-bucket cap
+    is implemented."""
     from .textops import simhash16, simhash64
     if bits == 64:
         sigs = simhash64(df, text_col)
@@ -231,17 +242,22 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     cluster\".  Returns (doc_id, cluster_id) for every doc appearing in a
     pair; the representative is the doc whose id == cluster_id.
 
-    Each iteration is one join + one map-side-combined groupBy over the
-    (id, label) frame — labels and edges only, payloads never move.
-    Convergence needs D iterations for component diameter D; near-dup
-    components are shallow (clones cluster around one source), so the
-    driver loop usually exits after 2-3 rounds via the zero-changes check
-    (a one-scalar action per round, not a data collect).  The iterative
-    fixpoint is inherently non-SQL-single-query; the DuckDB oracle uses a
+    The seed is propagation round 1: one groupBy over the edge list
+    labels every doc ``least(id, min neighbour id)``.  Each further round
+    is one join + one map-side-combined groupBy over the (id, label) frame
+    — labels and edges only, payloads never move — whose projection also
+    flags the labels it lowered; the flags are counted on the
+    checkpointed frame (a one-scalar action, no second join).  A
+    component whose minimum sits D hops from its farthest member is
+    settled by the seed plus D-1 rounds and CONFIRMED by one zero-change
+    round, so ``max_iter`` (the rounds after the seed) must be >= D.
+    Near-dup components are shallow (clones cluster around one source),
+    so the loop usually exits after 1-2 rounds.  The iterative fixpoint
+    is inherently non-SQL-single-query; the DuckDB oracle uses a
     recursive CTE over the same edges."""
     if max_iter < 1:
         # changed starts at 0, so max_iter=0 would skip both the loop and
-        # the non-convergence guard and return unpropagated labels
+        # the non-convergence guard and return unconfirmed labels
         raise ValueError("max_iter must be >= 1")
     sym = (pairs.select(F.col("a_id").cast("string").alias("src"),
                         F.col("b_id").cast("string").alias("dst"))
@@ -253,8 +269,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # on a cluster with unreliable executors use checkpoint() to a
     # reliable store instead)
     sym = sym.localCheckpoint(eager=True)
-    labels = (sym.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
+    labels = (sym.groupBy("src")
+              .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+              .withColumnRenamed("src", "id")
               .localCheckpoint(eager=True))
     changed = 0
     for _ in range(max_iter):
@@ -262,25 +279,20 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
                                       F.col("label").alias("dlabel")),
                         "dst")
                .groupBy("src").agg(F.min("dlabel").alias("nbr")))
-        new_labels = (labels.join(nbr, labels.id == nbr.src, "left")
-                      .select(labels.id,
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nbr"),
-                                                 F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint(eager=True))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "id")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
+        # every id has a neighbour, so the inner join keeps every id
+        labels = (labels.join(nbr, labels.id == nbr.src)
+                  .select(labels.id,
+                          F.least(F.col("label"), F.col("nbr")).alias("label"),
+                          (F.col("nbr") < F.col("label")).alias("changed"))
+                  .localCheckpoint(eager=True))
+        changed = labels.filter("changed").count()
         if changed == 0:
             break
     if changed != 0:
-        # a component with diameter > max_iter would otherwise silently
+        # a component deeper than max_iter would otherwise silently
         # split clusters and disagree with the recursive-CTE oracle —
         # truncation must never be silent.  NB convergence is only
-        # CONFIRMED by a zero-change round, so max_iter must exceed the
-        # deepest component's diameter by one; a graph that finishes
+        # CONFIRMED by a zero-change round; a graph that finishes
         # propagating exactly on the last round still raises here
         # (conservative by design — correctness was not verified).
         raise RuntimeError(

@@ -40,6 +40,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textops import let
+
 _WS_SPLIT = r"\s+"
 # Python twin of the Spark/DuckDB tokenizer: Java and RE2 \s are the
 # ASCII class [ \t\n\x0b\f\r], so the kernel must split ASCII-only too —
@@ -59,12 +61,13 @@ def _tokens(text_col: str):
 
 def ngram_col(tokens, n: int):
     """Array of word n-grams (space-joined) of ``tokens``; empty when the
-    document is shorter than ``n`` tokens.  Pure native expression."""
-    return F.when(
-        F.size(tokens) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(tokens) - n + 1),
-                    lambda i: F.concat_ws(" ", F.slice(tokens, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
+    document is shorter than ``n`` tokens.  Pure native expression; the
+    token array is bound with ``let``, so it is evaluated once per row."""
+    return let(tokens, lambda t: F.when(
+        F.size(t) >= n,
+        F.transform(F.sequence(F.lit(1), F.size(t) - n + 1),
+                    lambda i: F.concat_ws(" ", F.slice(t, i, n))),
+    ).otherwise(F.array().cast("array<string>")))
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
@@ -315,15 +318,14 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
         if ctx_rows else spark.createDataFrame([], "w1 string, lnc1 double")
     big_local = spark.createDataFrame(big_rows, "g string, lnc12 double") \
         if big_rows else spark.createDataFrame([], "g string, lnc12 double")
-    toks = _tokens(text_col)
-    pairs = F.when(
+    pairs = let(_tokens(text_col), lambda toks: F.when(
         F.size(toks) >= 2,
         F.transform(
             F.sequence(F.lit(1), F.size(toks) - 1),
             lambda i: F.struct(
                 F.element_at(toks, i).alias("w1"),
                 F.concat_ws(" ", F.slice(toks, i, 2)).alias("g")))
-    ).otherwise(F.array().cast("array<struct<w1:string,g:string>>"))
+    ).otherwise(F.array().cast("array<struct<w1:string,g:string>>")))
     ex = (docs.select(F.col(id_col).cast("string").alias(id_col),
                       F.explode(pairs).alias("p"))
           .select(id_col, "p.w1", "p.g"))
@@ -423,8 +425,7 @@ def kn_trigram_surprisal(docs: DataFrame, text_col: str = "text",
     w2_t = local(sorted(n1p2.items()), "w2k string, n1p2 long")
     w3_t = local(sorted(cont3.items()), "w3 string, cont3 long")
 
-    toks = _tokens(text_col)
-    pos = F.when(
+    pos = let(_tokens(text_col), lambda toks: F.when(
         F.size(toks) >= 3,
         F.transform(
             F.sequence(F.lit(1), F.size(toks) - 2),
@@ -436,7 +437,7 @@ def kn_trigram_surprisal(docs: DataFrame, text_col: str = "text",
                 F.element_at(toks, i + 2).alias("w3")))
     ).otherwise(F.array().cast(
         "array<struct<g123:string,g12:string,g23:string,"
-        "w2:string,w3:string>>"))
+        "w2:string,w3:string>>")))
     ex = (docs.select(F.col(id_col).cast("string").alias(id_col),
                       F.explode(pos).alias("p"))
           .select(id_col, "p.g123", "p.g12", "p.g23", "p.w2", "p.w3"))

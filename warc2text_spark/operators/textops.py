@@ -44,6 +44,15 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
+def let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` evaluated ONCE per row and bound to the
+    lambda variable ``v``.  Catalyst inlines a Python-side reuse of a
+    Column, so an expression captured inside a HOF lambda is re-evaluated
+    per element (``shingles`` re-split the whole document per shingle —
+    quadratic in its length); a HOF argument is evaluated once."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
