@@ -157,43 +157,6 @@ def test_ivf_topk_recall(spark):
     assert got == again
 
 
-def test_streaming_exact_dedup(spark, tmp_path):
-    from datetime import datetime
-
-    from warc2text_spark.streaming.dedup_stream import (
-        DOCS_SCHEMA,
-        dedup_batch,
-        dedup_stream,
-    )
-    t0 = datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(minutes):
-        from datetime import timedelta
-        return t0 + timedelta(minutes=minutes)
-
-    src = str(tmp_path / "docs_in")
-    out = str(tmp_path / "docs_out")
-    rows = [
-        ("a-1", ts(0), "the cat and the dog"),
-        ("a-2", ts(1), "completely different page"),
-        ("a-3", ts(2), "the cat and the dog"),   # re-crawl duplicate
-        ("a-4", ts(3), "third unique body"),
-        ("a-5", ts(4), "completely different page"),  # re-crawl duplicate
-    ]
-    spark.createDataFrame(rows, DOCS_SCHEMA).coalesce(1).write.parquet(src)
-
-    dedup_stream(spark, src, out)
-    got = spark.read.parquet(f"{out}/docs")
-    texts = sorted(r.text for r in got.collect())
-    assert texts == ["completely different page", "the cat and the dog",
-                     "third unique body"]
-
-    # the batch twin picks the first occurrence deterministically
-    batch = dedup_batch(spark.createDataFrame(rows, DOCS_SCHEMA))
-    ids = sorted(r.doc_id for r in batch.collect())
-    assert ids == ["a-1", "a-2", "a-4"]
-
-
 def test_gif_frame_walker_block_structure():
     """gif_frames walks real GIF block structure: extensions skipped,
     one slice per image descriptor (0x2C..sub-block terminator, local

@@ -6,7 +6,6 @@ from warc2text_spark.functions.langid import (
     SkipDetector,
     classify,
 )
-from warc2text_spark.functions.paragraph import paragraph_id
 from warc2text_spark.functions.urlutil import (
     combine_url_filters,
     encode_url,
@@ -60,12 +59,18 @@ def test_encode_url_quirks():
 
 
 # --- F20 paragraph id -----------------------------------------------------------
-def test_paragraph_id():
-    assert paragraph_id("a\nb\n") == "a\t1:2\nb\t2:2\n"
-    assert paragraph_id("a\nb") == "a\t1:2\nb\t2:2\n"
-    assert paragraph_id("") == ""
-    assert paragraph_id("\n\n") == ""
-    assert paragraph_id("x\n\ny\n") == "x\t1:3\n\t2:3\ny\t3:3\n"
+def test_paragraph_id(spark):
+    from warc2text_spark.plans.pipeline import paragraph_id_col
+    cases = {
+        "a\nb\n": "a\t1:2\nb\t2:2\n",
+        "a\nb": "a\t1:2\nb\t2:2\n",
+        "": "",
+        "\n\n": "",
+        "x\n\ny\n": "x\t1:3\n\t2:3\ny\t3:3\n",
+    }
+    df = spark.createDataFrame([(c,) for c in cases], "chunk string")
+    got = dict(df.select("chunk", paragraph_id_col().alias("p")).collect())
+    assert got == cases
 
 
 # --- F19 langid -------------------------------------------------------------

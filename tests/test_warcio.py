@@ -220,21 +220,6 @@ def test_keep_payload_html_field(spark, warc_file, tmp_path):
     assert r.text == "chunked\n"
 
 
-def test_warc_python_datasource(spark, warc_file):
-    """spark.read.format('warc') — PySpark 4 Python Data Source."""
-    from warc2text_spark.sources.warc_datasource import register
-    register(spark)
-    df = spark.read.format("warc").load(warc_file)
-    assert df.count() == 6
-    assert df.schema.simpleString().startswith("struct<doc_id:string")
-    from warc2text_spark.plans.pipeline import PipelineOptions, run_pipeline
-    res = run_pipeline(df, PipelineOptions(classifier="skip",
-                                           media_text_mode="extract"))
-    urls = {r.url for r in res.main.collect()}
-    assert urls == {"https://a.example/1.html", "https://a.example/4.html",
-                    "https://a.example/5.html"}
-
-
 def test_warc_pipeline_plan_scans_once(spark, warc_file):
     """The WARC path reads and parses each file once: one binaryFile scan,
     one MapInArrow for the WARC parse plus one for extraction, and one A1

@@ -1,4 +1,5 @@
-"""Kernel 1: fused extraction over Arrow batches (mapInArrow).
+"""The extraction kernel: fused extraction and language identification over
+Arrow batches (mapInArrow).
 
 This is the Spark-side home of the reference's per-record scalar pipeline
 (transport decode -> zip -> charset -> HTML/plain extraction -> entity
@@ -28,12 +29,17 @@ Span semantics over the interleaved table (documented data-model mapping):
 
 The kernel never raises: all error paths become the ``err`` column and are
 resolved by native filters afterwards (keep_predicate()).
+
+Language identification (the reference's pluggable LanguageDetector stage,
+src/lang.hh:14-23) labels each surviving document in the same pass: the
+``langs`` column holds its {lang: chunk} split sorted by lang, for the
+per-language demux.
 """
 
 from __future__ import annotations
 
 import base64
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
@@ -66,12 +72,11 @@ _OUT_FIELDS = [
     ("plaintext", pa.string()),
     ("spans", pa.list_(SPAN_TYPE)),
 ]
-def _out_schema(classifier, keep_payload):
+def _out_schema(keep_payload):
     fields = list(_OUT_FIELDS)
     if keep_payload:
         fields.append(("payload_b64", pa.string()))
-    if classifier:
-        fields.append(("langs", LANG_TYPE))
+    fields.append(("langs", LANG_TYPE))
     return pa.schema(fields)
 
 OUTPUT_DDL = ("doc_id string, url string, http_ct string, warc_date string, "
@@ -79,13 +84,11 @@ OUTPUT_DDL = ("doc_id string, url string, http_ct string, warc_date string, "
               "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
 
 
-def _out_ddl(classifier, keep_payload):
+def _out_ddl(keep_payload):
     ddl = OUTPUT_DDL
     if keep_payload:
         ddl += ", payload_b64 string"
-    if classifier:
-        ddl += ", langs array<struct<lang:string,chunk:string>>"
-    return ddl
+    return ddl + ", langs array<struct<lang:string,chunk:string>>"
 
 
 @dataclass
@@ -94,11 +97,10 @@ class ExtractOptions:
     tag_filters_invert: bool = False
     skip_extraction: bool = False
     encode_urls: bool = False
-    # when set ('skip'|'heuristic'|'multilang'), language identification is
-    # fused into this kernel — one JVM<->Python crossing instead of two
-    # (the standalone Kernel 2 in langid_op.py re-serializes every carried
-    # column, which doubles Arrow traffic at scale)
-    classifier: str | None = None
+    # a functions.langid.DETECTORS name; language identification runs
+    # inside this kernel, so the carried columns cross JVM<->Python once
+    # (a separate langid kernel would re-serialize every one of them)
+    classifier: str = "skip"
     # 'passthrough' (default): non-zip media spans are preserved untouched,
     # keeping the interleaving (FIXTURES.md F17).  'extract': media spans
     # carry raw payload *bytes* (e.g. non-UTF-8 text from WARC ingestion,
@@ -117,7 +119,6 @@ class ExtractOptions:
     # (pairs with split_stream(pdf_text=True), which keeps PDF records
     # in the main stream rather than the K3 side route)
     pdf_text: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def _clean_one_doc(row: dict, tag_filters, opts: ExtractOptions):
@@ -254,14 +255,12 @@ def make_extract_kernel(opts: ExtractOptions | None = None):
     tag_filters_text = opts.tag_filters_text
     classifier = opts.classifier
     keep_payload = opts.keep_payload
-    schema = _out_schema(classifier, keep_payload)
+    schema = _out_schema(keep_payload)
 
     def kernel(batches):
+        from ..functions.langid import get_detector
         tag_filters = parse_tag_filters(tag_filters_text) if tag_filters_text else {}
-        detector = None
-        if classifier:
-            from ..functions.langid import get_detector
-            detector = get_detector(classifier)
+        detector = get_detector(classifier)
         import pyarrow.compute as pc
         for batch in batches:
             acols = {n: batch.column(i)
@@ -325,16 +324,15 @@ def make_extract_kernel(opts: ExtractOptions | None = None):
                 if keep_payload:
                     out["payload_b64"].append(
                         base64.b64encode(raw).decode("ascii"))
-                if detector is not None:
-                    # only surviving docs need language labels
-                    if err == rec.SUCCESS and plaintext:
-                        items = sorted(detector.detect(plaintext).items())
-                        for lang, chunk in items:
-                            ll.append(lang)
-                            lc.append(chunk)
-                        l_counts.append(len(items))
-                    else:
-                        l_counts.append(0)
+                # only surviving docs need language labels
+                if err == rec.SUCCESS and plaintext:
+                    items = sorted(detector.detect(plaintext).items())
+                    for lang, chunk in items:
+                        ll.append(lang)
+                        lc.append(chunk)
+                    l_counts.append(len(items))
+                else:
+                    l_counts.append(0)
 
             def native(name):
                 c = acols.get(name)
@@ -410,7 +408,7 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
 
 def run_extract(df: DataFrame, opts: ExtractOptions | None = None,
                 num_partitions: int | None = None) -> DataFrame:
-    """Project to kernel inputs, optionally salt-repartition, run Kernel 1.
+    """Project to kernel inputs, optionally salt-repartition, run the kernel.
 
     Every document takes the same nested kernel, so the input is scanned,
     filtered and parsed once per pass."""
@@ -419,4 +417,4 @@ def run_extract(df: DataFrame, opts: ExtractOptions | None = None,
     if num_partitions:
         projected = salted_repartition(projected, num_partitions)
     return projected.mapInArrow(make_extract_kernel(opts),
-                                _out_ddl(opts.classifier, opts.keep_payload))
+                                _out_ddl(opts.keep_payload))

@@ -49,16 +49,6 @@ def is_text_format(clean_ct: Column) -> Column:
     return clean_ct.isin(*sorted(TEXT_CONTENT_TYPES))
 
 
-def oversize_ok(max_record_size: int = MAX_RECORD_SIZE) -> Column:
-    """F1 (warcreader.cc:56-60): whole record above the cap is skipped."""
-    return payload_bytes() <= F.lit(max_record_size)
-
-
-def nonempty_payload() -> Column:
-    """F2 (warcpreprocessor.cc:136-137)."""
-    return payload_bytes() > 0
-
-
 def is_robots_txt(url: Column = None) -> Column:
     """F3 (warcpreprocessor.cc:16-47), exact find-based logic in SQL:
     host starts after the first '://' (anywhere), else after a leading
@@ -128,11 +118,6 @@ def is_pdf(url: Column = None, clean_ct: Column = None) -> Column:
     u = F.coalesce(url if url is not None else F.col("url"), F.lit(""))
     c = clean_ct if clean_ct is not None else clean_http_ct()
     return (~is_text_format(c)) & (u.endswith(".pdf") | (c == "application/pdf"))
-
-
-def payload_size_ok(max_payload: int = MAX_PAYLOAD_SIZE) -> Column:
-    """F8 (warcpreprocessor.cc:162-163)."""
-    return payload_bytes() <= F.lit(max_payload)
 
 
 def url_ok(user_filter_regex: str | None = None, url: Column = None) -> Column:

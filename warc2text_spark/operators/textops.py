@@ -53,13 +53,6 @@ def let(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
-    )
-
-
 def pack_sequences(df: DataFrame, window: int = 512,
                    text_col: str = "text",
                    bucket_size: int = 1 << 20,
@@ -118,18 +111,10 @@ def pack_sequences(df: DataFrame, window: int = 512,
     return out
 
 
+# BPE-style pre-tokenization: letter runs, digit runs and punctuation runs
+# count separately (the usual byte-BPE pre-split shape, ASCII classes so
+# the regex is engine-portable)
 BPE_ISH_TOKEN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \\t\\n]+"
-
-
-def token_count_bpe(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """BPE-style pre-tokenization count: letter runs, digit runs, and
-    punctuation runs count separately (the usual byte-BPE pre-split shape,
-    ASCII classes so the regex is engine-portable)."""
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_ISH_TOKEN))
-        .cast("long").alias("n_bpe_tokens"),
-    )
 
 
 # shared expression builders — quality_score, repetition_ratio, and

@@ -21,8 +21,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.langid_op import explode_by_lang
-from .pipeline import PipelineOptions, run_pipeline
+from .pipeline import PipelineOptions, explode_by_lang, run_pipeline
 
 LEDGER_SCHEMA = ("bucket int, n_input bigint, n_kept bigint, n_lang_rows bigint, "
                  "text_bytes bigint, wave int, run_id string")

@@ -1,11 +1,11 @@
 """End-to-end extraction pipeline (EP-A/B/C of the reference, SURVEY.md §3).
 
-Dataflow (all native except the two Arrow kernels):
+Dataflow (all native except the Arrow extraction kernel):
 
     scan -> F1-F9 native filters (+ robots/pdf side routes)
          -> [salted repartition on xxhash64(doc_id)]
-         -> Kernel 1 (extract)  -> keep_predicate (error dispatch + F14)
-         -> Kernel 2 (langid)   -> explode by lang
+         -> extract kernel (extraction + langid) -> keep_predicate
+            (error dispatch + F14) -> explode by lang
          -> partitioned write (lang=...) + side outputs + metrics
 
 Reference lifecycle: /root/reference/src/warcpreprocessor.cc:111-248.
@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from ..operators import filters as flt
 from ..operators.extract import ExtractOptions, keep_predicate, run_extract
-from ..operators.langid_op import explode_by_lang, run_langid
 
 
 @dataclass
@@ -32,12 +31,9 @@ class PipelineOptions:
     encode_urls: bool = False
     robots_process: bool = False
     user_url_filter: str | None = None
-    num_partitions: int | None = None   # salted repartition before Kernel 1
+    num_partitions: int | None = None   # salted repartition before the kernel
     paragraph_identification: bool = False
     max_record_size: int = flt.MAX_RECORD_SIZE
-    # fuse langid into Kernel 1 (one Python crossing); False = standalone
-    # Kernel 2 (useful when langid runs on a different cadence/model)
-    fuse_langid: bool = True
     # see ExtractOptions.media_text_mode ('extract' for WARC-ingested docs)
     media_text_mode: str = "passthrough"
     # carry transport-decoded payload (base64) for '-f html' outputs
@@ -59,11 +55,12 @@ class PipelineResult:
     main: DataFrame       # kept docs: spans/plaintext/err/charset/langs
     robots: DataFrame     # F3 side route (raw input rows)
     pdf: DataFrame        # F7 side route (raw input rows)
-    extracted: DataFrame  # post-Kernel-1, pre-drop (for metrics/diagnostics)
+    extracted: DataFrame  # post-kernel, pre-drop (for metrics/diagnostics)
     prefiltered: DataFrame  # post-F1-F9 input rows (for A1 counters)
     # CollectMetrics handles attached at plan-build time so counters() can
     # read total/text aggregates from the SAME job that computes the lang
-    # aggregate — one input scan, not three (warcpreprocessor.hh:57-62)
+    # aggregate — one input scan, not three (warcpreprocessor.hh:57-62).
+    # None on a streaming input, which Observation does not support.
     obs_total: object = None
     obs_text: object = None
 
@@ -84,12 +81,16 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
     # parquet pushdown is unaffected (CollectMetrics blocks pushdown
     # through itself, so it must sit above anything that needs to reach
     # the scan).
-    obs_total = Observation()
-    main0_obs = main0.observe(
-        obs_total,
-        F.count(F.lit(1)).alias("totalRecords"),
-        F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"),
-    )
+    observe = not df.isStreaming  # Observation rejects streaming Datasets
+    obs_total = obs_text = None
+    main0_obs = main0
+    if observe:
+        obs_total = Observation()
+        main0_obs = main0.observe(
+            obs_total,
+            F.count(F.lit(1)).alias("totalRecords"),
+            F.coalesce(F.sum(flt.payload_bytes()), F.lit(0)).alias("totalBytes"),
+        )
     ext = run_extract(
         main0_obs,
         ExtractOptions(
@@ -97,7 +98,7 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
             tag_filters_invert=opts.tag_filters_invert,
             skip_extraction=opts.skip_extraction,
             encode_urls=opts.encode_urls,
-            classifier=opts.classifier if opts.fuse_langid else None,
+            classifier=opts.classifier,
             media_text_mode=opts.media_text_mode,
             keep_payload=opts.keep_payload,
             encoding_errors=opts.encoding_errors,
@@ -106,14 +107,13 @@ def run_pipeline(df: DataFrame, opts: PipelineOptions | None = None) -> Pipeline
         num_partitions=opts.num_partitions,
     )
     kept = ext.filter(keep_predicate(opts.tag_filters_invert, opts.skip_extraction))
-    if not opts.fuse_langid:
-        kept = run_langid(kept, opts.classifier)
-    obs_text = Observation()
-    kept = kept.observe(
-        obs_text,
-        F.count(F.lit(1)).alias("textRecords"),
-        F.coalesce(F.sum(F.octet_length("plaintext")), F.lit(0)).alias("textBytes"),
-    )
+    if observe:
+        obs_text = Observation()
+        kept = kept.observe(
+            obs_text,
+            F.count(F.lit(1)).alias("textRecords"),
+            F.coalesce(F.sum(F.octet_length("plaintext")), F.lit(0)).alias("textBytes"),
+        )
     return PipelineResult(main=kept, robots=robots, pdf=pdf, extracted=ext,
                           prefiltered=main0, obs_total=obs_total,
                           obs_text=obs_text)
@@ -140,6 +140,16 @@ def paragraph_id_col(chunk=None):
                                     F.lit(":"), n.cast("string")))
     return F.when(n > 0, F.concat(F.array_join(tagged, "\n"), F.lit("\n"))) \
             .otherwise(F.lit(""))
+
+
+def explode_by_lang(df: DataFrame) -> DataFrame:
+    """(record x lang) rows for the per-language demux (A3).  The kernel
+    emits ``langs`` sorted by lang — the reference's unordered_map
+    emission order is nondeterministic (record.cc:291-298,
+    bilangwriter.cc:171-181), ours is deterministic by construction."""
+    ex = df.withColumn("lc", F.explode("langs")).drop("langs")
+    return ex.withColumn("lang", F.col("lc.lang")) \
+             .withColumn("chunk", F.col("lc.chunk")).drop("lc")
 
 
 def demux_by_lang(result_main: DataFrame, paragraph_identification: bool = False) -> DataFrame:

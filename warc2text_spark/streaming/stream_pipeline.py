@@ -1,5 +1,5 @@
 """Structured Streaming extraction: the same stateless dataflow (filters ->
-kernels -> demux) bound to a file-stream source.
+kernel -> demux) bound to a file-stream source.
 
 The reference is a bounded batch job (warc2text_main.cc:218-230) with no
 cross-record state beyond counters, so the streaming variant needs no
@@ -26,43 +26,17 @@ def read_span_stream(spark: SparkSession, input_dir: str,
 
 def streaming_extract(spark: SparkSession, input_dir: str,
                       opts: PipelineOptions | None = None) -> DataFrame:
-    """PURE streaming extraction plan — no foreachBatch batch shim: the
-    native F1-F9 filters, the mapInArrow extraction kernel (langid
-    fused), the error dispatch and the per-language demux all compose
+    """PURE streaming extraction plan — no foreachBatch batch shim:
+    ``run_pipeline`` (native F1-F9 filters, the mapInArrow extraction
+    kernel, the error dispatch) and the per-language demux compose
     directly on the unbounded DataFrame, because none of them holds
     cross-record state.  Returns the streaming (record x lang) frame;
     attach any sink/trigger.  (The reference is a bounded batch job —
     this is the continuous-ingest form a crawl pipeline runs as shards
     land.)"""
-    from ..operators import filters as flt
-    from ..operators.extract import ExtractOptions, keep_predicate, run_extract
     opts = opts or PipelineOptions()
-    stream = read_span_stream(spark, input_dir)
-    main0, _robots, _pdf = flt.split_stream(
-        stream,
-        robots_process=opts.robots_process,
-        user_url_filter=opts.user_url_filter,
-        max_record_size=opts.max_record_size,
-        case_insensitive=opts.case_insensitive_headers,
-        pdf_text=opts.pdf_text,
-    )
-    ext = run_extract(main0, ExtractOptions(
-        tag_filters_text=opts.tag_filters_text,
-        tag_filters_invert=opts.tag_filters_invert,
-        skip_extraction=opts.skip_extraction,
-        encode_urls=opts.encode_urls,
-        classifier=opts.classifier if opts.fuse_langid else None,
-        media_text_mode=opts.media_text_mode,
-        keep_payload=opts.keep_payload,
-        encoding_errors=opts.encoding_errors,
-        pdf_text=opts.pdf_text,
-    ))
-    kept = ext.filter(keep_predicate(opts.tag_filters_invert,
-                                     opts.skip_extraction))
-    if not opts.fuse_langid:
-        from ..operators.langid_op import run_langid
-        kept = run_langid(kept, opts.classifier)
-    return demux_by_lang(kept, opts.paragraph_identification)
+    res = run_pipeline(read_span_stream(spark, input_dir), opts)
+    return demux_by_lang(res.main, opts.paragraph_identification)
 
 
 def run_streaming_pipeline(spark: SparkSession, input_dir: str, out_dir: str,
